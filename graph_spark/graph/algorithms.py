@@ -7,6 +7,7 @@ Dijkstra) round only at the output edge, as declared.
 
 from __future__ import annotations
 
+import itertools
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -32,7 +33,7 @@ BETWEENNESS_REPLICATE_EDGE_LIMIT = 50_000_000
 # Per-superstep vertex-state broadcast is only sane while the whole
 # state vector fits comfortably in every executor: at ~64 bytes/row
 # (short string id + a double + a long) this limit is ~256 MB of
-# broadcast per superstep.  Above it the Pregel kernels switch to the
+# broadcast per superstep.  Above it PropertyGraph.pregel switches to the
 # dual-layout SHUFFLE-STATE path: state stays hash-partitioned on node,
 # joins a second src-partitioned edge copy co-partitioned with it
 # (zero-exchange sort-merge join), and the dst message combine becomes
@@ -42,16 +43,8 @@ BETWEENNESS_REPLICATE_EDGE_LIMIT = 50_000_000
 VERTEX_STATE_BROADCAST_LIMIT = 4_000_000
 
 
-def _use_broadcast_state(nv: int, broadcast_state: bool | None) -> bool:
-    """Route a Pregel kernel's superstep join: explicit override wins,
-    else broadcast only while the vertex state is broadcast-sized."""
-    if broadcast_state is not None:
-        return bool(broadcast_state)
-    return nv <= VERTEX_STATE_BROADCAST_LIMIT
-
-
 def _attach_contributions(edges: DataFrame, contrib: DataFrame, broadcast: bool) -> DataFrame:
-    """The ONE superstep join every Pregel kernel here shares: attach
+    """The superstep join of :meth:`PropertyGraph.pregel`: attach
     per-source messages (`contrib`, columns src + payload) to the
     stationary pre-partitioned edge copy.
 
@@ -89,6 +82,14 @@ def _edge_count(graph: PropertyGraph) -> int:
     cnt = graph.edges.count()
     _COUNT_MEMO[key] = (weakref.ref(graph.edges), cnt)
     return cnt
+
+
+def _routes_local(graph: PropertyGraph, local: bool | None) -> bool:
+    """The local-vs-distributed route: an explicit `local` wins, else
+    graphs under LOCAL_EDGE_THRESHOLD edges run the numpy kernel."""
+    if local is None:
+        return _edge_count(graph) < LOCAL_EDGE_THRESHOLD
+    return local
 
 
 def _factorize_edges(pdf):
@@ -170,24 +171,30 @@ def _local_cc_pdf(pdf):
     return pd.DataFrame({"node": nodes, "component": nodes[label]})
 
 
+def _np_peel(src, dst, n: int, alive, k: int, max_iter: int | None = None):
+    """numpy peel to fixpoint (or `max_iter` rounds): per round, degree
+    over the alive edges by src, keep deg>=k, drop edges with a dropped
+    end — the same round semantics as the distributed :func:`_peel`.
+    Returns the new alive-edge mask."""
+    import numpy as np
+
+    for _ in itertools.count() if max_iter is None else range(max_iter):
+        keep = np.bincount(src[alive], minlength=n) >= k
+        new_alive = alive & keep[src] & keep[dst]
+        if int(new_alive.sum()) == int(alive.sum()):
+            break
+        alive = new_alive
+    return alive
+
+
 def _local_kcore_pdf(pdf, k: int, max_iter: int):
-    """numpy k-core peel: same round semantics as the distributed loop
-    (degree over current edges by src, keep deg>=k, filter both ends)."""
+    """numpy k-core peel (see :func:`_np_peel`)."""
     import numpy as np
     import pandas as pd
 
     nodes, src, dst = _factorize_edges(pdf)
     n = len(nodes)
-    src = np.asarray(src)
-    dst = np.asarray(dst)
-    alive = np.ones(len(src), dtype=bool)
-    for _ in range(max_iter):
-        deg = np.bincount(src[alive], minlength=n)
-        keep = deg >= k
-        new_alive = alive & keep[src] & keep[dst]
-        if int(new_alive.sum()) == int(alive.sum()):
-            break
-        alive = new_alive
+    alive = _np_peel(src, dst, n, np.ones(len(src), dtype=bool), k, max_iter)
     deg = np.bincount(src[alive], minlength=n)
     mask = deg > 0
     return pd.DataFrame({"node": nodes[mask], "degree": deg[mask].astype("int64")})
@@ -319,28 +326,48 @@ def bfs_distances(
     local=None auto-routes small graphs to the numpy kernel (identical
     semantics, one task); the distributed loop is the 100 TB path.
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             graph, lambda pdf: _local_bfs_pdf(pdf, source, max_hops), "node string, d long"
         )
-    spark = graph.edges.sparkSession
-    visited = spark.createDataFrame([(source, 0)], ["node", "d"]).localCheckpoint(eager=True)
+    seed = graph.edges.sparkSession.createDataFrame([(source, 0)], ["node", "d"])
+    return _frontier_reach(graph.edges, seed, [], max_hops, hop_col="d")
+
+
+def _frontier_reach(
+    edges: DataFrame,
+    seeds: DataFrame,
+    keys: list,
+    max_hops: int,
+    reverse: bool = False,
+    hop_col: str | None = None,
+) -> DataFrame:
+    """The frontier loop of every BFS-shaped traversal: state keyed
+    (*keys, node), so many searches share one superstep count.  Per hop
+    the frontier is broadcast onto the stationary edges, the next nodes
+    are deduplicated (a map-side partial combine), visited ones are
+    anti-joined away (visited is |V|-bounded, broadcast too), and one
+    `take(1)` stops the loop on an empty frontier.  Broadcasting the
+    frontier instead of shuffling the edges measured 35.4 s -> 32.5 s
+    for SCC reach on the 5M-edge bench graph: the dedup shuffle, not
+    the join, dominates.
+
+    A key the edges also carry (SCC's `part`) restricts the walk to
+    same-key edges; one they lack (a BFS landmark) rides along.
+    `reverse=True` walks edges backward; `hop_col` records the hop at
+    which a node was reached.  `max_hops` is a horizon, not a
+    convergence proof.  Returns the visited (*keys, node[, hop_col])."""
+    a, b = ("dst", "src") if reverse else ("src", "dst")
+    on = [c for c in keys if c in edges.columns] + [a]
+    visited = seeds.localCheckpoint(eager=True)
     frontier = visited
     for hop in range(1, max_hops + 1):
-        fr = F.broadcast(frontier.select("node"))
-        nxt = (
-            graph.edges.join(fr, graph.edges.src == fr.node, "inner")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        frontier = (
-            nxt.join(F.broadcast(visited.select(F.col("node").alias("vn"))),
-                     nxt.node == F.col("vn"), "left_anti")
-            .withColumn("d", F.lit(hop))
-            .localCheckpoint(eager=True)
-        )
+        fr = F.broadcast(frontier.select(*keys, F.col("node").alias(a)))
+        nxt = edges.join(fr, on).select(*keys, F.col(b).alias("node")).distinct()
+        frontier = nxt.join(F.broadcast(visited.select(*keys, "node")), [*keys, "node"], "left_anti")
+        if hop_col is not None:
+            frontier = frontier.withColumn(hop_col, F.lit(hop))
+        frontier = frontier.localCheckpoint(eager=True)
         if not frontier.take(1):
             break
         visited = visited.unionByName(frontier).localCheckpoint(eager=True)
@@ -398,47 +425,16 @@ def multi_source_bfs(
     closeness/eccentricity at scale, where per-node exact centrality
     (O(V) BFS runs) is infeasible.  Returns DataFrame(lm, node, d).
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_multi_bfs_pdf(pdf, sources, max_hops),
             "lm string, node string, d long",
         )
-    spark = graph.edges.sparkSession
-    visited = spark.createDataFrame(
+    seeds = graph.edges.sparkSession.createDataFrame(
         [(s, s, 0) for s in sources], ["lm", "node", "d"]
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        fr = F.broadcast(frontier.select("lm", "node"))
-        nxt = (
-            graph.edges.join(fr, graph.edges.src == fr.node, "inner")
-            .select("lm", F.col("dst").alias("node"))
-            .distinct()
-        )
-        frontier = (
-            nxt.join(
-                F.broadcast(
-                    visited.select(F.col("lm").alias("vlm"), F.col("node").alias("vn"))
-                ),
-                (nxt.lm == F.col("vlm")) & (nxt.node == F.col("vn")),
-                "left_anti",
-            )
-            .withColumn("d", F.lit(hop))
-            .localCheckpoint(eager=True)
-        )
-        if not frontier.take(1):
-            break
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    return visited
-
-
-def k_hop_count(graph: PropertyGraph, source: str, k: int) -> int:
-    """Count of distinct nodes reachable within k hops (excluding none —
-    source counts if reachable per BFS semantics including distance 0)."""
-    return bfs_distances(graph, source, k).count()
+    )
+    return _frontier_reach(graph.edges, seeds, ["lm"], max_hops, hop_col="d")
 
 
 def connected_components(
@@ -452,75 +448,28 @@ def connected_components(
     lexicographically smallest reachable node id.
 
     broadcast_state=None auto-picks the superstep join layout (see
-    :func:`pagerank` / :func:`_attach_contributions`): above
-    VERTEX_STATE_BROADCAST_LIMIT vertices the delta set joins an
-    src-partitioned edge copy instead of broadcasting, so the
-    first rounds (delta == |V|) never broadcast the state vector.
+    :meth:`PropertyGraph.pregel`): above VERTEX_STATE_BROADCAST_LIMIT
+    vertices the delta set joins an src-partitioned edge copy instead of
+    broadcasting, so the first rounds (delta == |V|) never broadcast the
+    state vector.
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(graph, _local_cc_pdf, "node string, component string")
-    spark = graph.edges.sparkSession
-    nodes = (
-        graph.edges.select(F.col("src").alias("node"))
-        .union(graph.edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()  # read 2-3x below (layout count + state init)
+    return PropertyGraph(graph.vertices, graph.edges.select("src", "dst")).pregel(
+        init=lambda v, nv: v.select("node", F.col("node").alias("component")),
+        send=lambda s: s.select(F.col("node").alias("src"), "component"),
+        combine=[F.min("component").alias("nbr_min")],
+        update=lambda nv: [
+            F.least("component", F.coalesce("nbr_min", "component")).alias("component")
+        ],
+        max_iter=max_iter,
+        # delta propagation: a label only decreases, and a neighbor's new
+        # minimum can only come from a node whose label changed last
+        # round — so after the first rounds only the still-converging
+        # fringe sends, even on diameter-bound graphs
+        changed=F.col("nbr_min") < F.col("component"),
+        broadcast_state=broadcast_state,
     )
-    bcast = _use_broadcast_state(nodes.count(), broadcast_state)
-    # see pagerank: the edge layout is keyed by the superstep mode —
-    # dst pre-partitioning makes the per-round combine exchange-free
-    # under the broadcast join; src pre-partitioning co-partitions the
-    # edges with the (node-keyed) delta for the shuffle-state join
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(spark.sparkContext.defaultParallelism, "dst" if bcast else "src")
-        .persist()
-    )
-    state = (
-        nodes.select("node", F.col("node").alias("component"))
-        .repartition(spark.sparkContext.defaultParallelism, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    # Delta propagation: a node's label only decreases, and a neighbor's
-    # new minimum can only arrive from a node whose label CHANGED last
-    # round — so only the delta set sends messages.  Round 1 everyone is
-    # a delta; after the first couple of rounds the delta (and its
-    # broadcast) collapses to the still-converging fringe, so late
-    # rounds cost almost nothing even on diameter-bound graphs.
-    delta = state
-    for _ in range(max_iter):
-        msgs = (
-            _attach_contributions(edges, delta.withColumnRenamed("node", "src"), bcast)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        # keep old + new side by side in ONE checkpointed frame so the
-        # delta extraction is a cheap filter on it, not a second
-        # state-vs-state sort-merge join per round
-        step = (
-            state.join(msgs.withColumnRenamed("node", "mnode"),
-                       state.node == F.col("mnode"), "left")
-            .select(
-                "node",
-                F.col("component").alias("old_component"),
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_min"), F.col("component")),
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        delta = step.filter(F.col("component") != F.col("old_component")).select(
-            "node", "component"
-        )
-        state = step.select("node", "component")
-        if not delta.take(1):
-            break
-    edges.unpersist()
-    return state
 
 
 def pagerank(
@@ -539,82 +488,37 @@ def pagerank(
     broadcast onto dst-partitioned edges while |V| <=
     VERTEX_STATE_BROADCAST_LIMIT, else the shuffle-state layout
     (state co-partitioned with an src-partitioned edge copy — see
-    :func:`_attach_contributions`) so billion-vertex graphs never
+    :meth:`PropertyGraph.pregel`) so billion-vertex graphs never
     broadcast the state vector.  Small graphs auto-route to the numpy
     kernel (local=None).
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_pagerank_pdf(pdf, iterations, damping),
             "node string, rank double",
         )
-    spark0 = graph.edges.sparkSession
-    nodes = (
-        graph.edges.select(F.col("src").alias("node"))
-        .union(graph.edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()  # read 2-3x below (layout count + state init)
-    )
-    nv = nodes.count()
-    if nv == 0:
-        return spark0.createDataFrame([], "node string, rank double")
-
-    # Pre-partition edges ONCE, keyed by the superstep layout: broadcast
-    # mode keys on dst (the broadcast join preserves it, so the
-    # per-superstep groupBy(dst) combine needs no exchange); shuffle
-    # mode keys on src (co-partitioned with state, so the contribution
-    # join needs no exchange and the dst combine is the one shuffle).
-    # State CARRIES the out-degree (one init join instead of a
-    # rank-x-outdeg sort-merge join per superstep) and is pre-partitioned
-    # on node, the same key the message combine emits, so the
-    # state-update join is exchange-free too — measured 3.2x
-    # (38 s -> 12 s) for 10 iterations on a 5M-edge synthetic graph.
-    bcast = _use_broadcast_state(nv, broadcast_state)
-    spark = graph.edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(n_part, "dst" if bcast else "src")
-        .persist()
-    )
-    edges.count()
-    outdeg = graph.edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    state = (
-        nodes.join(outdeg, "node", "left")
-        .select(
-            "node",
-            F.coalesce("deg", F.lit(0)).alias("deg"),
-            F.lit(1.0 / nv).alias("rank"),
-        )
-        .repartition(n_part, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    for _ in range(iterations):
-        contrib = state.filter(F.col("deg") > 0).select(
+    edges = graph.edges.select("src", "dst")
+    # the state carries the out-degree: one init join instead of a
+    # rank-x-outdeg join per superstep
+    outdeg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
+    return PropertyGraph(graph.vertices, edges).pregel(
+        init=lambda v, nv: v.join(outdeg, "node", "left").select(
+            "node", F.coalesce("deg", F.lit(0)).alias("deg"), F.lit(1.0 / nv).alias("rank")
+        ),
+        send=lambda s: s.filter(F.col("deg") > 0).select(
             F.col("node").alias("src"), (F.col("rank") / F.col("deg")).alias("w")
-        )
-        msgs = (
-            _attach_contributions(edges, contrib, bcast)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("w").alias("acc"))
-        )
-        state = (
-            state.join(msgs, "node", "left")
-            .select(
-                "node",
-                "deg",
-                (F.lit((1.0 - damping) / nv) + F.lit(damping) * F.coalesce(F.col("acc"), F.lit(0.0))).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    edges.unpersist()
-    return state.select("node", "rank")
+        ),
+        combine=[F.sum("w").alias("acc")],
+        update=lambda nv: ["deg", _teleport_rank(F.lit((1.0 - damping) / nv), damping)],
+        max_iter=iterations,
+        broadcast_state=broadcast_state,
+    ).select("node", "rank")
+
+
+def _teleport_rank(teleport, damping: float):
+    """The PageRank-family update: teleport + damping x received mass."""
+    return (teleport + F.lit(damping) * F.coalesce(F.col("acc"), F.lit(0.0))).alias("rank")
 
 
 def _local_ppr_pdf(pdf, sources, iterations: int, damping: float):
@@ -676,66 +580,27 @@ def pagerank_weighted(
     unweighted one.  Small graphs auto-route to the numpy kernel.
     """
     edges3 = graph.edges.select("src", "dst", F.col(weight_col).cast("double").alias("weight"))
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             PropertyGraph(graph.vertices, edges3),
             lambda pdf: _local_wpagerank_pdf(pdf, iterations, damping),
             "node string, rank double",
             cols=("src", "dst", "weight"),
         )
-    nodes = (
-        edges3.select(F.col("src").alias("node"))
-        .union(edges3.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    nv = nodes.count()
-    spark = edges3.sparkSession
-    if nv == 0:
-        nodes.unpersist()
-        return spark.createDataFrame([], "node string, rank double")
-    n_part = spark.sparkContext.defaultParallelism
-    bcast = _use_broadcast_state(nv, broadcast_state)
-    edges = edges3.repartition(n_part, "dst" if bcast else "src").persist()
-    edges.count()
-    # state carries out-weight; see `pagerank` for the superstep layout
+    # the state carries the out-weight; see `pagerank`
     outw = edges3.groupBy(F.col("src").alias("node")).agg(F.sum("weight").alias("ws"))
-    state = (
-        nodes.join(outw, "node", "left")
-        .select(
-            "node",
-            F.coalesce("ws", F.lit(0.0)).alias("ws"),
-            F.lit(1.0 / nv).alias("rank"),
-        )
-        .repartition(n_part, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    for _ in range(iterations):
-        per_w = state.filter(F.col("ws") > 0).select(
+    return PropertyGraph(graph.vertices, edges3).pregel(
+        init=lambda v, nv: v.join(outw, "node", "left").select(
+            "node", F.coalesce("ws", F.lit(0.0)).alias("ws"), F.lit(1.0 / nv).alias("rank")
+        ),
+        send=lambda s: s.filter(F.col("ws") > 0).select(
             F.col("node").alias("src"), (F.col("rank") / F.col("ws")).alias("pw")
-        )
-        msgs = (
-            _attach_contributions(edges, per_w, bcast)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pw") * F.col("weight")).alias("acc"))
-        )
-        state = (
-            state.join(msgs, "node", "left")
-            .select(
-                "node",
-                "ws",
-                (
-                    F.lit((1.0 - damping) / nv)
-                    + F.lit(damping) * F.coalesce(F.col("acc"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    edges.unpersist()
-    return state.select("node", "rank")
+        ),
+        combine=[F.sum(F.col("pw") * F.col("weight")).alias("acc")],
+        update=lambda nv: ["ws", _teleport_rank(F.lit((1.0 - damping) / nv), damping)],
+        max_iter=iterations,
+        broadcast_state=broadcast_state,
+    ).select("node", "rank")
 
 
 def incremental_components(labels: DataFrame, new_edges: DataFrame) -> DataFrame:
@@ -827,54 +692,22 @@ def katz_centrality(
     ONE message combine on dst over stationary pre-partitioned edges,
     the x-vector broadcast.  Small graphs auto-route to numpy.
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_katz_pdf(pdf, iterations, alpha),
             "node string, katz double",
         )
-    spark = graph.edges.sparkSession
-    nodes = (
-        graph.edges.select(F.col("src").alias("node"))
-        .union(graph.edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()  # read 2-3x below (layout count + state init)
+    return PropertyGraph(graph.vertices, graph.edges.select("src", "dst")).pregel(
+        init=lambda v, nv: v.select("node", F.lit(1.0).alias("katz")),
+        send=lambda s: s.select(F.col("node").alias("src"), F.col("katz").alias("x")),
+        combine=[F.sum("x").alias("acc")],
+        update=lambda nv: [
+            (F.lit(1.0) + F.lit(alpha) * F.coalesce(F.col("acc"), F.lit(0.0))).alias("katz")
+        ],
+        max_iter=iterations,
+        broadcast_state=broadcast_state,
     )
-    n_part = spark.sparkContext.defaultParallelism
-    bcast = _use_broadcast_state(nodes.count(), broadcast_state)
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(n_part, "dst" if bcast else "src")
-        .persist()
-    )
-    edges.count()
-    state = (
-        nodes.select("node", F.lit(1.0).alias("katz"))
-        .repartition(n_part, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    for _ in range(iterations):
-        xs = state.select(F.col("node").alias("src"), F.col("katz").alias("x"))
-        msgs = (
-            _attach_contributions(edges, xs, bcast)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("x").alias("acc"))
-        )
-        state = (
-            state.join(msgs, "node", "left")
-            .select(
-                "node",
-                (F.lit(1.0) + F.lit(alpha) * F.coalesce(F.col("acc"), F.lit(0.0))).alias(
-                    "katz"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    edges.unpersist()
-    return state.select("node", "katz")
 
 
 def _local_louvain_pdf(pdf, rounds: int):
@@ -940,9 +773,7 @@ def louvain_local_rounds(
     stationary edges, community sizes broadcast.  Small graphs
     auto-route to the numpy kernel.  Returns DataFrame(node, comm).
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_louvain_pdf(pdf, rounds),
@@ -1022,74 +853,38 @@ def personalized_pagerank(
     cost model is identical; only the teleport vector changes.
     Returns DataFrame(node, rank).
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_ppr_pdf(pdf, sources, iterations, damping),
             "node string, rank double",
         )
-    nodes = (
-        graph.edges.select(F.col("src").alias("node"))
-        .union(graph.edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()  # read 2-3x below (layout count + state init)
-    )
+    edges = graph.edges.select("src", "dst")
     src_set = [str(s) for s in sources]
-    ns = nodes.filter(F.col("node").isin(src_set)).count()
-    spark = graph.edges.sparkSession
-    if ns == 0:
-        # no seed present in the graph: zero teleport mass everywhere
-        # (materialize before unpersisting the frame the plan reads)
-        out = nodes.select("node", F.lit(0.0).alias("rank")).localCheckpoint(
-            eager=True
-        )
-        nodes.unpersist()
-        return out
-    tele = F.when(F.col("node").isin(src_set), F.lit(1.0 / ns)).otherwise(F.lit(0.0))
-    n_part = spark.sparkContext.defaultParallelism
-    bcast = _use_broadcast_state(nodes.count(), broadcast_state)
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(n_part, "dst" if bcast else "src")
-        .persist()
+    is_src = F.col("node").isin(src_set)
+    ns = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .filter(is_src)
+        .distinct()
+        .count()
     )
-    edges.count()
-    # state carries out-degree; see `pagerank` for the superstep layout
-    outdeg = graph.edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    state = (
-        nodes.join(outdeg, "node", "left")
-        .select("node", F.coalesce("deg", F.lit(0)).alias("deg"), tele.alias("rank"))
-        .repartition(n_part, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    for _ in range(iterations):
-        contrib = state.filter((F.col("deg") > 0) & (F.col("rank") != 0)).select(
+    # no seed in the graph: zero teleport mass everywhere
+    tele = F.when(is_src, F.lit(1.0 / ns)).otherwise(F.lit(0.0)) if ns else F.lit(0.0)
+    # the state carries the out-degree; see `pagerank`
+    outdeg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
+    return PropertyGraph(graph.vertices, edges).pregel(
+        init=lambda v, nv: v.join(outdeg, "node", "left").select(
+            "node", F.coalesce("deg", F.lit(0)).alias("deg"), tele.alias("rank")
+        ),
+        send=lambda s: s.filter((F.col("deg") > 0) & (F.col("rank") != 0)).select(
             F.col("node").alias("src"), (F.col("rank") / F.col("deg")).alias("w")
-        )
-        msgs = (
-            _attach_contributions(edges, contrib, bcast)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("w").alias("acc"))
-        )
-        state = (
-            state.join(msgs, "node", "left")
-            .select(
-                "node",
-                "deg",
-                (
-                    F.lit(1.0 - damping) * tele
-                    + F.lit(damping) * F.coalesce(F.col("acc"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    edges.unpersist()
-    return state.select("node", "rank")
+        ),
+        combine=[F.sum("w").alias("acc")],
+        update=lambda nv: ["deg", _teleport_rank(F.lit(1.0 - damping) * tele, damping)],
+        max_iter=iterations,
+        broadcast_state=broadcast_state,
+    ).select("node", "rank")
 
 
 def triangle_count(edges_undirected_pairs: DataFrame) -> DataFrame:
@@ -1144,9 +939,7 @@ def shortest_paths_weighted(
     fixpoint).  Returns DataFrame(node, dist).  Hash-declared with
     integer weights (g14); small graphs auto-route to the numpy kernel
     with identical per-round semantics."""
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_sssp_pdf(pdf, source, weight_col, max_iter),
@@ -1267,28 +1060,35 @@ def k_core(
     rounds <= peel depth.  At 100 TB the edge table shrinks
     monotonically, so persist-and-replace per round keeps lineage and
     scan size bounded.  Small graphs auto-route to the numpy kernel."""
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_kcore_pdf(pdf, k, max_iter),
             "node string, degree long",
         )
-    edges = graph.edges.select("src", "dst").localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    edges = _peel(graph.edges.select("src", "dst").localCheckpoint(eager=True), k, max_iter)
+    return edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
+
+
+def _peel(edges: DataFrame, k: int, max_iter: int | None = None) -> DataFrame:
+    """Distributed peel to fixpoint (or `max_iter` rounds) over a
+    checkpointed edge frame: per round a degree combine, the deg>=k node
+    set checkpointed, two broadcast semi-joins, and one edge count that
+    doubles as the next round's baseline."""
+    n = edges.count()
+    for _ in itertools.count() if max_iter is None else range(max_iter):
         deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("node").localCheckpoint(eager=True)
-        n_before = edges.count()
         kb = F.broadcast(keep)
         edges = (
             edges.join(kb, edges.src == kb.node, "left_semi")
             .join(kb, edges.dst == kb.node, "left_semi")
             .localCheckpoint(eager=True)
         )
-        if edges.count() == n_before:
+        n_before, n = n, edges.count()
+        if n == n_before:
             break
-    return edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
+    return edges
 
 
 def _kosaraju_pdf(pdf):
@@ -1342,43 +1142,6 @@ def _kosaraju_pdf(pdf):
         for m in members:
             label[m] = rep
     return pd.DataFrame({"node": list(nodes), "component": [label[i] for i in range(n)]})
-
-
-def _scc_reach(ein: DataFrame, pivots: DataFrame, max_inner: int, reverse: bool) -> DataFrame:
-    """Multi-source reachability from each partition's pivot, constrained
-    to that partition's (same-part) edges.  One frontier loop covers ALL
-    partitions simultaneously — state is keyed (part, node), so the
-    superstep count is the max BFS depth over partitions, not the sum.
-    `reverse=True` walks edges backward.  Returns (part, node).
-
-    `max_inner` is a superstep HORIZON, not a convergence proof: a
-    partition whose diameter exceeds it yields an incomplete reach set
-    (and thus over-split SCCs).  The default (60) covers the measured
-    synthetic/fixture graphs; graphs suspected of >60-hop directed
-    diameters should raise max_iter on strongly_connected_components
-    or use the local Kosaraju route."""
-    a, b = ("dst", "src") if reverse else ("src", "dst")
-    visited = pivots.select("part", "node").localCheckpoint(eager=True)
-    frontier = visited
-    for _ in range(max_inner):
-        # frontier/visited are |V|-bounded state; broadcast them so the
-        # (checkpointed, stationary) edge frame never re-shuffles per
-        # superstep — the bfs_distances layout.  Remaining superstep
-        # cost is the frontier-dedup combine (distinct), which is
-        # map-side partial; measured 35.4 s -> 32.5 s on the 5M-edge
-        # bench graph (the dedup shuffle, not the join, dominates)
-        nxt = (
-            ein.join(F.broadcast(frontier.withColumnRenamed("node", a)), ["part", a])
-            .select("part", F.col(b).alias("node"))
-            .distinct()
-        )
-        frontier = nxt.join(
-            F.broadcast(visited), ["part", "node"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if not frontier.take(1):
-            break
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    return visited
 
 
 def _scc_fwbw(graph: PropertyGraph, max_rounds: int, max_inner: int) -> DataFrame:
@@ -1454,8 +1217,12 @@ def _scc_fwbw(graph: PropertyGraph, max_rounds: int, max_inner: int) -> DataFram
             break
         # -- pivot per partition + simultaneous FW / BW reach
         pivots = part.groupBy("part").agg(F.min("node").alias("node")).localCheckpoint(eager=True)
-        reach_f = _scc_reach(ein, pivots, max_inner, reverse=False)
-        reach_b = _scc_reach(ein, pivots, max_inner, reverse=True)
+        # state keyed (part, node): one frontier loop reaches from every
+        # partition's pivot at once, over that partition's edges only.
+        # max_inner is a horizon: a partition whose directed diameter
+        # exceeds it gets an incomplete reach set (over-split SCCs)
+        reach_f = _frontier_reach(ein, pivots, ["part"], max_inner)
+        reach_b = _frontier_reach(ein, pivots, ["part"], max_inner, reverse=True)
         scc = reach_f.join(reach_b, ["part", "node"]).localCheckpoint(eager=True)
         assigned.append(
             scc.join(pivots.select("part", F.col("node").alias("component")), "part").select(
@@ -1506,21 +1273,12 @@ def _local_coreness_pdf(pdf, max_k: int):
 
     nodes, src, dst = _factorize_edges(pdf)
     n = len(nodes)
-    src = np.asarray(src)
-    dst = np.asarray(dst)
     alive = np.ones(len(src), dtype=bool)
     core = np.zeros(n, dtype="int64")
     k = 1
     while alive.any() and k <= max_k:
-        while True:
-            deg = np.bincount(src[alive], minlength=n)
-            keep = deg >= k
-            new_alive = alive & keep[src] & keep[dst]
-            if int(new_alive.sum()) == int(alive.sum()):
-                break
-            alive = new_alive
-        deg = np.bincount(src[alive], minlength=n)
-        core[deg > 0] = k
+        alive = _np_peel(src, dst, n, alive, k)
+        core[np.bincount(src[alive], minlength=n) > 0] = k
         k += 1
     mask = core > 0
     return pd.DataFrame({"node": nodes[mask], "coreness": core[mask]})
@@ -1543,9 +1301,7 @@ def core_decomposition(
     graphs (the quantity itself is the output).  Small graphs
     auto-route to the numpy kernel; both paths are parity-tested
     against an independent Batagelj-Zaversnik min-degree peel."""
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             graph, lambda pdf: _local_coreness_pdf(pdf, max_k), "node string, coreness long"
         )
@@ -1554,20 +1310,7 @@ def core_decomposition(
     levels: list[DataFrame] = []
     k = 1
     while k <= max_k and edges.take(1):
-        while True:
-            deg = edges.groupBy(F.col("src").alias("node")).agg(
-                F.count(F.lit(1)).alias("degree")
-            )
-            keep = deg.filter(F.col("degree") >= k).select("node").localCheckpoint(eager=True)
-            n_before = edges.count()
-            kb = F.broadcast(keep)
-            edges = (
-                edges.join(kb, edges.src == kb.node, "left_semi")
-                .join(kb, edges.dst == kb.node, "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            if edges.count() == n_before:
-                break
+        edges = _peel(edges, k)
         survivors = edges.select(F.col("src").alias("node")).distinct()
         levels.append(survivors.withColumn("coreness", F.lit(k).cast("long")))
         k += 1
@@ -1590,9 +1333,7 @@ def strongly_connected_components(
     distributed FW-BW-Trim decomposition (:func:`_scc_fwbw`) runs.
     Returns DataFrame(node, component) with component = lexicographic
     min member id on both paths (parity-tested)."""
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(graph, _kosaraju_pdf, "node string, component string")
     return _scc_fwbw(graph, max_rounds, max_inner)
 
@@ -1607,55 +1348,22 @@ def label_propagation(
     its in-neighbors each round (ties -> smallest label).  Deterministic
     synchronous variant, hash-declared (g15); small graphs auto-route to
     the numpy kernel.  broadcast_state follows the shared Pregel layout
-    rule (:func:`_attach_contributions`): above
+    rule (:meth:`PropertyGraph.pregel`): above
     VERTEX_STATE_BROADCAST_LIMIT vertices the label vector joins an
     src-partitioned edge copy instead of broadcasting."""
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             graph, lambda pdf: _local_lp_pdf(pdf, max_iter), "node string, label string"
         )
-    spark = graph.edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    nodes = (
-        graph.edges.select(F.col("src").alias("node"))
-        .union(graph.edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()  # read 2-3x below (layout count + state init)
+    return PropertyGraph(graph.vertices, graph.edges.select("src", "dst")).pregel(
+        init=lambda v, nv: v.select("node", F.col("node").alias("label")),
+        send=lambda s: s.select(F.col("node").alias("src"), "label"),
+        # most frequent in-neighbor label, ties -> smallest label
+        combine=[F.mode("label", deterministic=True).alias("best_label")],
+        update=lambda nv: [F.coalesce("best_label", "label").alias("label")],
+        max_iter=max_iter,
+        broadcast_state=broadcast_state,
     )
-    bcast = _use_broadcast_state(nodes.count(), broadcast_state)
-    edges = (
-        graph.edges.select("src", "dst")
-        .repartition(n_part, "dst" if bcast else "src")
-        .persist()
-    )
-    edges.count()
-    state = (
-        nodes.select("node", F.col("node").alias("label"))
-        .repartition(n_part, "node")
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    for _ in range(max_iter):
-        counts = (
-            _attach_contributions(edges, state.withColumnRenamed("node", "src"), bcast)
-            .groupBy(F.col("dst").alias("node"), F.col("label"))
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("label").asc())
-        best = counts.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).select(
-            F.col("node").alias("bnode"), F.col("label").alias("best_label")
-        )
-        state = (
-            state.join(best, state.node == F.col("bnode"), "left")
-            .select("node", F.coalesce(F.col("best_label"), F.col("label")).alias("label"))
-            .localCheckpoint(eager=True)
-        )
-    edges.unpersist()
-    return state
 
 
 def node_similarity_jaccard(
@@ -1956,9 +1664,7 @@ def betweenness_centrality(
     source (V supersteps per source) — at that point sampled landmark
     closeness (g22) is the honest substitute, not exact betweenness.
     """
-    if local is None:
-        local = _edge_count(graph) < LOCAL_EDGE_THRESHOLD
-    if local:
+    if _routes_local(graph, local):
         return _run_local(
             graph,
             lambda pdf: _local_betweenness_pdf(pdf, sources, normalized),

@@ -58,9 +58,14 @@ def test_graph_algorithms_on_empty(spark):
     from graph_spark.graph import algorithms as alg
 
     g = _empty_graph(spark)
+    ew = spark.createDataFrame([], "src string, dst string, weight double")
+    gw = PropertyGraph(ew.select(F.col("src").alias("id")).distinct(), ew)
     for local in (True, False):
         assert alg.pagerank(g, iterations=2, local=local).count() == 0
         assert alg.connected_components(g, local=local).count() == 0
+        assert alg.label_propagation(g, max_iter=2, local=local).count() == 0
+        assert alg.personalized_pagerank(g, ["x"], iterations=2, local=local).count() == 0
+        assert alg.pagerank_weighted(gw, iterations=2, local=local).count() == 0
     out = alg.strongly_connected_components(g, local=False)
     assert out.count() == 0 and out.columns == ["node", "component"]
     # a fully empty graph yields an empty frontier — no rows at all

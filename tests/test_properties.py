@@ -1000,6 +1000,26 @@ def test_pregel_auto_routes_to_shuffle_state(spark, monkeypatch):
         for r in alg.connected_components(g, local=False).collect()
     }
     assert gc == wc
+    # the other four kernels on the same superstep primitive
+    rng = random.Random(11)
+    ew = spark.createDataFrame(
+        [(a, b, float(rng.randint(1, 9))) for a, b in edges], ["src", "dst", "weight"]
+    )
+    gw = PropertyGraph(ew.select(F.col("src").alias("id")).distinct(), ew)
+    for fn, graph, col in (
+        (lambda gr, loc: alg.pagerank_weighted(gr, 4, local=loc), gw, "rank"),
+        (lambda gr, loc: alg.personalized_pagerank(gr, ["n0", "n1"], 4, local=loc), g, "rank"),
+        (lambda gr, loc: alg.katz_centrality(gr, 4, alpha=0.01, local=loc), g, "katz"),
+        (lambda gr, loc: alg.label_propagation(gr, 4, local=loc), g, "label"),
+    ):
+        want = {r["node"]: r[col] for r in fn(graph, True).collect()}
+        got = {r["node"]: r[col] for r in fn(graph, False).collect()}
+        assert got.keys() == want.keys(), col
+        for n in want:
+            if col == "label":
+                assert got[n] == want[n], n
+            else:
+                assert abs(got[n] - want[n]) < 1e-9, (col, n)
 
 
 @pytest.mark.parametrize("seed", SEEDS)
